@@ -13,6 +13,11 @@ import org.apache.spark.sql.SparkSession
   *    re-tuning static partition counts.
   *  - UTC session time — all dt/hr derivations are timezone-stable.
   *  - nanos-as-long parquet reading (the events table's TIMESTAMP(NANOS)).
+  *  - `file:` stream checkpoints commit through the FileSystem-API manager
+  *    ([[graft.streaming.SchemeCheckpointFileManager]]): Spark's default
+  *    FileContext rename forks two `readlink` processes per committed
+  *    state or log file when libhadoop is absent; other schemes keep the
+  *    default.
   */
 object GraftSession {
   def build(master: String = "local[*]",
@@ -26,6 +31,8 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.SchemeCheckpointFileManager].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
